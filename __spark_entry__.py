@@ -609,9 +609,7 @@ def _q_pelt_binomial(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binomial cost: the 2-row (successes; trials) input shape — trials
     n_i = 1 + turn_idx % 3, successes k_i = n_i when value is above the
     conversation median else 0."""
-    import pandas as pd
-
-    from transcriptts.kernels.pelt import pelt
+    from transcriptts.detect import detect_changepoints
 
     w = Window.partitionBy("conv_id")
     s = _signal(spark, sf_dir).select(
@@ -625,21 +623,8 @@ def _q_pelt_binomial(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(0.0)
         .alias("successes"),
     )
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        pdf = pdf.sort_values("turn_idx")
-        mat = np.vstack([pdf["successes"].to_numpy(float), pdf["trials"].to_numpy(float)])
-        bps = pelt(mat, penalty=1.0, cost="binomial", min_size=3)
-        return pd.DataFrame({"conv_id": pdf["conv_id"].iloc[0], "breakpoint_idx": bps})
-
-    from transcriptts.partitioning import kernel_partitions
-
-    return (
-        kernel_partitions(s, "conv_id")
-        .groupBy("conv_id")
-        .applyInPandas(run, "conv_id string, breakpoint_idx long")
+    return detect_changepoints(
+        s, value_cols=["successes", "trials"], cost="binomial", penalty=1.0, min_size=3
     )
 
 

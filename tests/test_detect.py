@@ -54,3 +54,33 @@ def test_select_penalties_spark(spark):
     assert len(r) == 1
     assert r[0]["breakpoints"] == [30]
     assert r[0]["selected_penalty"] > 0
+
+
+def test_detect_null_value_reaches_kernel_as_nan(spark):
+    """A null value is NaN to the kernel: CUSUM over the series matches the
+    numpy kernel on the same values with NaN in place of the null."""
+    from transcriptts.kernels.cusum import cusum
+
+    vals = [0.1, None, 0.2, 9.0, 0.1]
+    rows = [("n", i, v) for i, v in enumerate(vals)]
+    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, value double")
+    got = sorted(r["changepoint_idx"] for r in detect_cusum(df).collect())
+    assert got == list(cusum(np.array(vals, dtype=float), 0.0, 1.0, 0.0, 5.0))
+
+
+def test_detect_short_series_yields_no_rows(step_df):
+    """A series too short to split gives no breakpoint rows, and the other
+    conversations are unaffected."""
+    short = step_df.sparkSession.createDataFrame([("s", 0, 1.0)], step_df.schema)
+    got = {r["conv_id"] for r in detect_changepoints(step_df.union(short), penalty=2.0, min_size=2).collect()}
+    assert got == {"a", "b"}
+
+
+def test_select_penalties_failure_emits_null_row(spark):
+    """A series where selection fails still gets one all-null row."""
+    x = np.concatenate([np.full(30, 0.0), np.full(30, 8.0)]) + np.sin(np.arange(60)) * 0.1
+    rows = [("s", i, float(v)) for i, v in enumerate(x)] + [("one", 0, 1.0)]
+    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, value double")
+    got = {r["conv_id"]: r for r in select_penalties(df, cost="gaussian", min_size=2).collect()}
+    assert got["s"]["breakpoints"] == [30] and got["s"]["n_breakpoints"] == 1
+    assert (got["one"]["selected_penalty"], got["one"]["n_breakpoints"], got["one"]["breakpoints"]) == (None, None, None)

@@ -60,3 +60,27 @@ def test_smooth_fails_fast_on_bad_params(two_series):
         smooth(df, "ema", alpha=2.0)  # raises on driver, no job launched
     with pytest.raises(ValueError):
         smooth(df, "nope")
+
+
+def test_smooth_null_value_reaches_kernel_as_nan(spark):
+    """A null inside a series is NaN to the kernel, as `to_numpy(dtype=float)`
+    makes it; NaN outputs come back as null."""
+    vals = [1.0, None, 3.0, 5.0, 7.0]
+    rows = [("n", i, v) for i, v in enumerate(vals)]
+    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, value double")
+    got = _collect(smooth(df, "wma", weights=[1.0, 1.0]))["n"]
+    expected = K.wma(np.array(vals, dtype=float), weights=[1.0, 1.0])
+    assert got == [None if np.isnan(v) else v for v in expected]
+    assert got == [None, None, 4.0, 6.0]
+
+
+def test_smooth_short_series(spark):
+    """A series shorter than a 'valid'-mode window yields no rows by default
+    and fails the job with strict=True."""
+    rows = [("long", i, float(i)) for i in range(6)] + [("short", 0, 1.0), ("short", 1, 2.0)]
+    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, value double")
+    got = _collect(smooth(df, "sma", window_size=3))
+    assert set(got) == {"long"}
+    np.testing.assert_allclose(got["long"], K.sma(np.arange(6.0), window_size=3), atol=1e-12, rtol=0)
+    with pytest.raises(Exception, match="ValueError"):
+        smooth(df, "sma", window_size=3, strict=True).collect()

@@ -7,8 +7,11 @@ encoded byte sizes). `decompress_series` explodes blobs back into points;
 roundtrip is bit-exact.
 
 Chunking: `chunk` = floor(bucket epoch / chunk_seconds) so one blob covers a
-bounded time range (default 1 day of 1m points = <=1440 points/blob). The
-groupBy carries only (ts, value) pairs — Arrow-batched, no per-row Python.
+bounded time range (default 1 day of 1m points = <=1440 points/blob). Packing
+runs through `partitioning.per_series`: each chunk's (ts, value) pairs are
+gathered into one sorted array row on the JVM, and one Python call packs a
+whole Arrow batch of chunks — with day-sized chunks of a handful of points,
+one pandas group per chunk would make per-group overhead the whole runtime.
 
 At 100 TB this is the storage win for cold data: a metronome-ish series
 packs ~60-80x for timestamps and 5-20x for values; blobs stay individually
@@ -17,14 +20,11 @@ decodable so point lookups only touch the covering chunk.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-COMPRESSED_SCHEMA = (
-    "conv_id string, metric string, chunk long, n int, "
-    "ts_min timestamp, ts_max timestamp, "
-    "ts_blob binary, val_blob binary, raw_bytes long, enc_bytes long"
-)
+from .partitioning import per_series
 
 
 def compress_series(
@@ -34,69 +34,38 @@ def compress_series(
     chunk_seconds: int = 86400,
 ) -> DataFrame:
     """Rollup points → one compressed chunk row per (conv_id, metric, chunk)."""
-    import numpy as np
-    import pandas as pd
-
     from .kernels.gorilla import encode_floats, encode_timestamps
 
+    ts = F.col(ts_col).cast("timestamp")
     base = df.select(
         "conv_id",
         "metric",
-        F.floor(F.unix_seconds(F.col(ts_col).cast("timestamp")) / chunk_seconds).alias("chunk"),
-        F.col(ts_col).cast("timestamp").alias("_ts"),
+        F.floor(F.unix_seconds(ts) / chunk_seconds).alias("chunk"),
+        F.unix_micros(ts).alias("_us"),
         F.col(value_col).cast("double").alias("_v"),
     )
 
-    # Grouping happens JVM-side (collect_list + sort_array on a (ts, v)
-    # struct — ts is the leading struct field, so sort_array orders by
-    # time); Python then sees whole Arrow BATCHES of chunk rows, not one
-    # pandas group per chunk. With day-sized chunks the groups are tiny
-    # (a handful of points), so a per-group applyInPandas paid ~ms of
-    # pandas overhead per chunk — 40k chunks made that the whole runtime.
-    from .partitioning import kernel_partitions
-
-    grouped = (
-        kernel_partitions(base, "conv_id", "metric", "chunk")
-        .groupBy("conv_id", "metric", "chunk")
-        .agg(F.sort_array(F.collect_list(F.struct("_ts", "_v"))).alias("pts"))
-        .select(
-            "conv_id", "metric", "chunk",
-            F.col("pts._ts").alias("ts_arr"), F.col("pts._v").alias("v_arr"),
+    def pack(ts_us, vals):
+        # epoch microseconds are exact in float64 for 1685-2255
+        ts_us = ts_us.astype(np.int64)
+        ts_blob, val_blob = encode_timestamps(ts_us), encode_floats(vals)
+        return (
+            [len(vals)], ts_us[:1], ts_us[-1:], [ts_blob], [val_blob],
+            [len(vals) * 16], [len(ts_blob) + len(val_blob)],
         )
+
+    packed = per_series(
+        base, ["conv_id", "metric", "chunk"], "_us", ["_us", "_v"], pack,
+        "conv_id string, metric string, chunk long, n int, ts_min long, ts_max long, "
+        "ts_blob binary, val_blob binary, raw_bytes long, enc_bytes long",
     )
-
-    def pack_batches(batches):
-        for pdf in batches:
-            out = {k: [] for k in (
-                "conv_id", "metric", "chunk", "n", "ts_min", "ts_max",
-                "ts_blob", "val_blob", "raw_bytes", "enc_bytes",
-            )}
-            for conv_id, metric, chunk, ts_arr, v_arr in zip(
-                pdf["conv_id"], pdf["metric"], pdf["chunk"], pdf["ts_arr"], pdf["v_arr"]
-            ):
-                ts = np.asarray(ts_arr).astype("datetime64[us]")
-                ts_us = ts.astype(np.int64)
-                vals = np.asarray(v_arr, dtype=np.float64)
-                ts_blob = encode_timestamps(ts_us)
-                val_blob = encode_floats(vals)
-                out["conv_id"].append(conv_id)
-                out["metric"].append(metric)
-                out["chunk"].append(chunk)
-                out["n"].append(len(vals))
-                out["ts_min"].append(ts[0])
-                out["ts_max"].append(ts[-1])
-                out["ts_blob"].append(ts_blob)
-                out["val_blob"].append(val_blob)
-                out["raw_bytes"].append(len(vals) * 16)
-                out["enc_bytes"].append(len(ts_blob) + len(val_blob))
-            yield pd.DataFrame(out)
-
-    return grouped.mapInPandas(pack_batches, COMPRESSED_SCHEMA)
+    return packed.withColumns(
+        {"ts_min": F.timestamp_micros("ts_min"), "ts_max": F.timestamp_micros("ts_max")}
+    )
 
 
 def decompress_series(df: DataFrame) -> DataFrame:
     """Compressed chunks → (conv_id, metric, bucket_start, value) points."""
-    import numpy as np
     import pandas as pd
 
     from .kernels.gorilla import decode_floats, decode_timestamps

@@ -1,10 +1,11 @@
 """Spark wrappers for changepoint detection.
 
-Each conversation is one independent series → `applyInPandas` per conv_id
-(the DP/scan kernels are inherently sequential; conversations are the
-parallelism unit, exactly as SURVEY §3.1 plans). Outputs are tiny relative
-to inputs (a handful of breakpoints per series), so the post-UDF stages are
-cheap.
+Each conversation is one independent series (the DP/scan kernels are
+inherently sequential; conversations are the parallelism unit, exactly as
+SURVEY §3.1 plans). `partitioning.per_series` gathers each conversation into
+one sorted array row on the JVM and runs the kernel over whole Arrow batches
+of conversations. Outputs are tiny relative to inputs (a handful of
+breakpoints per series), so the post-UDF stages are cheap.
 
 `segment_stats` then re-expresses detected boundaries as windowed aggregates:
 segment_id = running count of breakpoints over (conv, order) — a window sum —
@@ -14,13 +15,14 @@ followed by an ordinary groupBy aggregation. This is the north-star shape
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .kernels.cusum import cusum as _cusum_kernel
-from .partitioning import kernel_partitions
 from .kernels.pelt import pelt as _pelt_kernel
 from .kernels.pelt import select_penalty as _select_penalty_kernel
+from .partitioning import per_series
 
 
 def detect_changepoints(
@@ -42,24 +44,16 @@ def detect_changepoints(
     rows), so a change visible in any dimension contributes to the segment
     cost. ``value_col`` remains the univariate shorthand.
     """
-    import numpy as np
-    import pandas as pd
-
     cols = list(value_cols) if value_cols else [value_col]
     probe = np.zeros((len(cols), 2)) if len(cols) > 1 else [0.0, 1.0]
     _pelt_kernel(probe, penalty=penalty, cost=cost, min_size=min_size, jump=jump, **cost_params)  # validate params early
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        srt = pdf.sort_values(order_col)
-        x = np.vstack([srt[c].to_numpy(dtype=float) for c in cols]) if len(cols) > 1 else srt[cols[0]].to_numpy(dtype=float)
+    def run(*xs):
+        x = np.vstack(xs) if len(xs) > 1 else xs[0]
         bps = _pelt_kernel(x, penalty=penalty, cost=cost, min_size=min_size, jump=jump, **cost_params)
-        return pd.DataFrame({"conv_id": pdf["conv_id"].iloc[0], "breakpoint_idx": bps})
+        return (np.asarray(bps, dtype=np.int64),)
 
-    return (
-        kernel_partitions(df.select("conv_id", order_col, *cols), "conv_id")
-        .groupBy("conv_id")
-        .applyInPandas(run, "conv_id string, breakpoint_idx long")
-    )
+    return per_series(df, ["conv_id"], order_col, cols, run, "conv_id string, breakpoint_idx long")
 
 
 def detect_cusum(
@@ -72,20 +66,13 @@ def detect_cusum(
     order_col: str = "turn_idx",
 ) -> DataFrame:
     """CUSUM alarms per conversation → (conv_id, changepoint_idx)."""
-    import pandas as pd
-
     _cusum_kernel([0.0, 0.0], expected_mean, expected_std_dev, slack_factor, threshold_factor)
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        x = pdf.sort_values(order_col)[value_col].to_numpy(dtype=float)
+    def run(x):
         cps = _cusum_kernel(x, expected_mean, expected_std_dev, slack_factor, threshold_factor)
-        return pd.DataFrame({"conv_id": pdf["conv_id"].iloc[0], "changepoint_idx": cps})
+        return (np.asarray(cps, dtype=np.int64),)
 
-    return (
-        kernel_partitions(df.select("conv_id", order_col, value_col), "conv_id")
-        .groupBy("conv_id")
-        .applyInPandas(run, "conv_id string, changepoint_idx long")
-    )
+    return per_series(df, ["conv_id"], order_col, [value_col], run, "conv_id string, changepoint_idx long")
 
 
 def select_penalties(
@@ -101,36 +88,20 @@ def select_penalties(
 ) -> DataFrame:
     """Per-conversation automatic penalty selection (BIC/AIC/AICc) →
     (conv_id, selected_penalty, n_breakpoints, breakpoints array)."""
-    import pandas as pd
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        x = pdf.sort_values(order_col)[value_col].to_numpy(dtype=float)
+    def run(x):
         try:
             res = _select_penalty_kernel(
                 x, cost=cost, method=method, min_size=min_size, jump=jump,
                 num_steps=num_steps, **cost_params,
             )
-            return pd.DataFrame(
-                {
-                    "conv_id": [pdf["conv_id"].iloc[0]],
-                    "selected_penalty": [res.selected_penalty],
-                    "n_breakpoints": [len(res.breakpoints)],
-                    "breakpoints": [res.breakpoints],
-                }
-            )
         except (RuntimeError, ValueError):
-            return pd.DataFrame(
-                {"conv_id": [pdf["conv_id"].iloc[0]], "selected_penalty": [None],
-                 "n_breakpoints": [None], "breakpoints": [None]}
-            )
+            return [None], [None], [None]  # selection failed: one all-null row
+        return [res.selected_penalty], [len(res.breakpoints)], [res.breakpoints]
 
-    return (
-        kernel_partitions(df.select("conv_id", order_col, value_col), "conv_id")
-        .groupBy("conv_id")
-        .applyInPandas(
-            run,
-            "conv_id string, selected_penalty double, n_breakpoints int, breakpoints array<long>",
-        )
+    return per_series(
+        df, ["conv_id"], order_col, [value_col], run,
+        "conv_id string, selected_penalty double, n_breakpoints int, breakpoints array<long>",
     )
 
 

@@ -1,19 +1,21 @@
 """Spark wrappers for extrapolation: per-conversation forecasts.
 
 Output shape: (conv_id, h, yhat) with h = 1..horizon. Sequential recursions
-(SES/Holt) run as grouped Arrow UDFs; the per-series grid search for unset
-Holt parameters stays inside the group (conversations are small; the grid is
-<= steps^3 SSE evaluations of O(n) each — SURVEY §3.3).
+(SES/Holt) run once per conversation through `partitioning.per_series`, over
+whole Arrow batches of JVM-gathered series; the per-series grid search for
+unset Holt parameters stays inside the kernel call (conversations are small;
+the grid is <= steps^3 SSE evaluations of O(n) each — SURVEY §3.3).
 
 Short series (below each method's minimum) yield zero rows by default
 (strict=True re-raises, matching reference throw behavior)."""
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 
 from .kernels import forecast as K
-from .partitioning import kernel_partitions
+from .partitioning import per_series
 
 METHODS = ("ses", "holt", "linear")
 
@@ -34,22 +36,15 @@ def forecast(
     kernel = getattr(K, method)
     kernel([1.0, 2.0, 3.0], horizon, **params)  # fail fast on bad params
 
-    import pandas as pd
+    h = np.arange(1, horizon + 1, dtype=np.int32)
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        x = pdf.sort_values(order_col)[value_col].to_numpy(dtype=float)
+    def run(x):
         try:
             yhat = kernel(x, horizon, **params)
         except ValueError:
             if strict:
                 raise
-            return pd.DataFrame({"conv_id": [], "h": [], "yhat": []})
-        return pd.DataFrame(
-            {"conv_id": pdf["conv_id"].iloc[0], "h": range(1, horizon + 1), "yhat": yhat}
-        )
+            return None
+        return h, yhat
 
-    return (
-        kernel_partitions(df.select("conv_id", order_col, value_col), "conv_id")
-        .groupBy("conv_id")
-        .applyInPandas(run, "conv_id string, h int, yhat double")
-    )
+    return per_series(df, ["conv_id"], order_col, [value_col], run, "conv_id string, h int, yhat double")

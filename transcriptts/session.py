@@ -40,7 +40,7 @@ def get_spark(
         # (measured 105s -> 11.5s for penalty selection at local[32]).
         # Shuffle width is already sized to cores above, so coalescing buys
         # little here; kernel stages additionally pin their own width via
-        # partitioning.kernel_partitions for sessions that re-enable this.
+        # partitioning.per_series for sessions that re-enable this.
         .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

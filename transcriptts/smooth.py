@@ -2,11 +2,12 @@
 
 Two execution paths, same semantics:
 
-- ``smooth(df, kind=...)`` — grouped Arrow UDF (`applyInPandas`) running the
-  reference-parity numpy kernels per conversation. One shuffle by conv_id;
-  each group is a single Arrow batch; no per-row Python. This is the golden
-  path (exact reference quirks) and the only path for EMA/Savitzky-Golay,
-  which are sequential/edge-quirky.
+- ``smooth(df, kind=...)`` — the reference-parity numpy kernels run once per
+  conversation through `partitioning.per_series`: each conversation is
+  gathered into one sorted array row on the JVM, and one Python call handles
+  a whole Arrow batch of conversations. This is the golden path (exact
+  reference quirks) and the only path for EMA/Savitzky-Golay, which are
+  sequential/edge-quirky.
 - ``sma_window(df, w)`` — pure Catalyst sliding-window average ('valid'
   mode), for when smoothing is fused into a larger plan: no Python at all,
   whole-stage codegen, incremental frame evaluation.
@@ -18,10 +19,12 @@ not input order keys, index the result.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .kernels import smoothing as K
+from .partitioning import per_series
 
 _OUT_SCHEMA = "conv_id string, pos long, value double"
 
@@ -53,37 +56,20 @@ def smooth(
         raise ValueError(f"unknown smoothing kind {kind!r}")
     kernel = getattr(K, kind)
     # fail fast on bad params (e.g. alpha out of range) before launching a job
-    import numpy as np
-
     probe_n = 2 * int(params.get("window_length", params.get("window_size", 1))) + 2
     probe_n = max(probe_n, len(np.atleast_1d(params.get("weights", [0.0]))))
     kernel(np.zeros(probe_n), **params)
 
-    import pandas as pd
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col)
+    def run(x):
         try:
-            out = kernel(pdf[value_col].to_numpy(dtype=float), **params)
+            out = kernel(x, **params)
         except ValueError:
             if strict:
                 raise
-            out = []
-        return pd.DataFrame(
-            {
-                "conv_id": pdf["conv_id"].iloc[0],
-                "pos": range(len(out)),
-                "value": out,
-            }
-        )
+            return None
+        return np.arange(len(out)), out
 
-    from .partitioning import kernel_partitions
-
-    return (
-        kernel_partitions(df.select("conv_id", order_col, value_col), "conv_id")
-        .groupBy("conv_id")
-        .applyInPandas(run, _OUT_SCHEMA)
-    )
+    return per_series(df, ["conv_id"], order_col, [value_col], run, _OUT_SCHEMA)
 
 
 def sma_window(
