@@ -892,7 +892,13 @@ def _q_nelder_mead_quadratic(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.DataFrame(out, columns=["conv_id", "xmin", "ymin", "fmin"])
 
-    return counts.mapInPandas(run, "conv_id string, xmin double, ymin double, fmin double")
+    # One task per core for the CPU-bound Python stage; AQE would coalesce
+    # the small groupBy shuffle to one task. The struct key keeps Spark from
+    # dropping the repartition as redundant (see partitioning.per_series).
+    n = spark.sparkContext.defaultParallelism
+    return counts.repartition(n, F.struct("conv_id")).mapInPandas(
+        run, "conv_id string, xmin double, ymin double, fmin double"
+    )
 
 
 _SQL_NELDER_MEAD = f"""
@@ -1817,10 +1823,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # (d continued) distinct PELT cost functions, r04-green, unchanged
         "pelt_l2": _q_pelt,
         "pelt_l1": _q_pelt_cost("l1", 5.0),
+        # (e) tail, past the 50-query window: r04-green variants over
+        # unchanged files (cap-skippable)
         "pelt_poisson": _q_pelt_poisson,
         "pelt_bernoulli": _q_pelt_bernoulli,
         "pelt_binomial": _q_pelt_binomial,
-        # (e) tail: r04-green variants over unchanged files (cap-skippable)
         "pelt_rbf": _q_pelt_cost("rbf", 2.0),
         "pelt_gaussian": _q_pelt_cost("gaussian", 10.0),
         "pelt_ar1": _q_pelt_cost("ar", 10.0, order=1),

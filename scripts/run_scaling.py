@@ -81,6 +81,9 @@ def spark_submit(
         # ratio measures parallel speedup, not a partitioning change.
         # (shuffle=cores cripples BOTH levels: 2-4x slower than 128.)
         "--conf", f"spark.sql.shuffle.partitions={shuffle_partitions}",
+        # Coalescing stays off here, unlike get_spark's default: the
+        # efficiency ratio needs a fixed work decomposition at both levels,
+        # so these numbers do not describe the default session.
         # Pin the decomposition for real: AQE's partition coalescing shrinks
         # small shuffles to a handful of reduce tasks (advisory 64MB), which
         # starves the wide leg — measured: the approx-percentile job (smaller
@@ -238,7 +241,10 @@ def main() -> None:
     # leg and bias the measured efficiency down
     cap_gb = _heap_cap_gb()
     if cap_gb is not None and args.heap_per_core * args.high > cap_gb:
-        clamped = max(1, cap_gb // args.high)
+        if cap_gb < args.high:
+            sys.exit(f"local[{args.high}] needs at least {args.high}g of heap (1g/core) "
+                     f"but the cap is {cap_gb}g (60% of MemAvailable); lower --high")
+        clamped = cap_gb // args.high
         print(f"clamping --heap-per-core {args.heap_per_core} -> {clamped} "
               f"so the local[{args.high}] leg fits {cap_gb}g "
               f"(60% of MemAvailable); both legs keep equal per-core heap",

@@ -62,7 +62,9 @@ def main() -> None:
             "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "48g"),
             # measure the engine's declared decomposition (the shipped
             # scaling confs): bytes are decomposition-independent, but stage
-            # counts in the report should match the documented plans
+            # counts in the report should match the documented plans. This
+            # needs a fixed work decomposition, so coalescing stays off and
+            # the task counts do not describe the default session.
             "spark.sql.adaptive.coalescePartitions.enabled": "false",
             "spark.sql.files.maxPartitionBytes": "16m",
         },

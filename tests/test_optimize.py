@@ -75,9 +75,8 @@ def test_nelder_mead_lattice_quadratics_round_exact():
     """The nelder_mead_quadratic driver query's correctness premise: for
     every turn count n, NM on the derived strictly convex quadratic lands
     close enough to the exact-sixteenth argmin that 4-dp rounding recovers
-    it EXACTLY (the oracle computes the argmin analytically). Sweep the
-    full residue space of the derivation (lcm of the moduli involved
-    covers all distinct (a, b, c, mx, my) combos well before 2000)."""
+    it EXACTLY (the oracle computes the argmin analytically). The sweep
+    covers all 145 (a, b, mx, my) combos (n mod 145); c only shifts f."""
     for n in range(1, 2001, 7):  # every residue class mod 29, 5, 11 is hit
         a = float(n % 5 + 1)
         b = float((n * 3) % 5 + 1)

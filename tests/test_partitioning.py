@@ -3,6 +3,7 @@ beside many short ones."""
 
 from __future__ import annotations
 
+import datetime as dt
 import re
 import uuid
 
@@ -11,7 +12,9 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from transcriptts.compress import compress_series, decompress_series
 from transcriptts.detect import detect_changepoints
+from transcriptts.gapfill import gapfill
 from transcriptts.kernels import pelt as KP
 from transcriptts.kernels import smoothing as KS
 from transcriptts.partitioning import per_series
@@ -30,9 +33,9 @@ def _by_conv(rows, order: str, value: str) -> dict:
     return out
 
 
-def _python_stage_tasks(df) -> int:
-    """Run `df` to a noop sink and return the task count of its last stage,
-    the one holding the Python UDF (nothing shuffles after it)."""
+def _stages(df) -> list[tuple[int, int]]:
+    """Run `df` to a noop sink and return (tasks, shuffle bytes written) of
+    each stage it ran, in stage order."""
     sc = df.sparkSession.sparkContext
     group = f"per-series-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "plan shape")
@@ -40,9 +43,20 @@ def _python_stage_tasks(df) -> int:
         df.write.format("noop").mode("overwrite").save()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    tracker = sc.statusTracker()
-    stages = [s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds]
-    return tracker.getStageInfo(max(stages)).numTasks
+    tracker, jsc = sc.statusTracker(), sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    ids = sorted({s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds})
+    return [
+        (info.numTasks, jsc.statusStore().lastStageAttempt(s).shuffleWriteBytes())
+        for s in ids
+        if (info := tracker.getStageInfo(s)) is not None and info.numCompletedTasks
+    ]
+
+
+def _python_stage_tasks(df) -> int:
+    """Task count of the last stage `df` runs, the one holding the Python
+    UDF or the windows (nothing shuffles after it)."""
+    return _stages(df)[-1][0]
 
 
 @pytest.mark.parametrize("coalesce", ["false", "true"])
@@ -129,3 +143,43 @@ def test_hot_conversation_beside_short_ones(spark):
     for cid, x in series.items():
         np.testing.assert_array_equal(ema[cid], KS.ema(x, 0.3))
         assert bps.get(cid, []) == KP.pelt(x, penalty=50.0, cost="l2"), cid
+
+
+def test_session_sizes_shuffles_by_bytes(spark):
+    """With coalescing on (get_spark's default), a tiny groupBy runs one
+    post-shuffle task, while a shuffle of 1-3 MB and one of 16 MB or more
+    keep the session's full shuffle width (at least 256 KB a partition)."""
+    assert spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled") == "true"
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionNum") == str(width)
+
+    def shuffle(df) -> tuple[int, int]:
+        """(bytes the map side wrote, tasks of the post-shuffle stage)"""
+        (_, written), (tasks, _) = _stages(df)[-2:]
+        return written, tasks
+
+    tiny_bytes, tiny_tasks = shuffle(spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count())
+    assert tiny_bytes < 256 << 10 and tiny_tasks == 1
+
+    # random doubles as unique keys: partial aggregation cannot shrink the
+    # shuffle and lz4 cannot compress it
+    def unique_keys(n):
+        return spark.range(n, numPartitions=4).select(F.rand(7).alias("k")).groupBy("k").count()
+
+    mid_bytes, mid_tasks = shuffle(unique_keys(150_000))
+    assert 1 << 20 < mid_bytes < 3 << 20 and mid_tasks == width
+    big_bytes, big_tasks = shuffle(unique_keys(2_000_000))
+    assert big_bytes >= 16 << 20 and big_tasks == width
+
+
+def test_gapfill_and_decode_run_one_task_per_core(spark):
+    """The CPU-bound stages after a small shuffle keep one task per core
+    although AQE would coalesce that shuffle to one task."""
+    n = spark.sparkContext.defaultParallelism
+    t0 = dt.datetime(2025, 1, 1)
+    rows = [(f"c{i:02d}", "m", t0 + dt.timedelta(minutes=2 * j), float(i + j)) for i in range(40) for j in range(6)]
+    tier = spark.createDataFrame(rows, "conv_id string, metric string, bucket_start timestamp, mean double")
+    tier = tier.withColumn("cnt", F.lit(1).cast("bigint"))
+    assert _python_stage_tasks(gapfill(tier, "1m")) == n
+    # one input partition, as after a coalesced shuffle
+    assert _python_stage_tasks(decompress_series(compress_series(tier).coalesce(1))) == n

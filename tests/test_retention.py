@@ -5,10 +5,13 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
+from transcriptts.compress import compress_series, decompress_series
+from transcriptts.kernels.gorilla import decode_floats, encode_floats
 from transcriptts.pipeline import RollupPipeline
 from transcriptts.retention import (
     STAT_COLS,
@@ -34,13 +37,16 @@ def pipeline(spark, tmp_path):
     return p
 
 
-def _tier_rows(pipeline, tier):
-    rows = pipeline.read_tier(tier).collect()
+def _rows(df):
     return {
         (r["conv_id"], r["metric"], r["bucket_start"], r["cnt"], r["sum"], r["mean"],
          r["min"], r["max"], r["p50"], r["p99"])
-        for r in rows
+        for r in df.collect()
     }
+
+
+def _tier_rows(pipeline, tier):
+    return _rows(pipeline.read_tier(tier))
 
 
 def _p_dates(pipeline, tier):
@@ -82,12 +88,7 @@ def test_expiry_drops_old_partitions_and_archives_bit_exact(spark, pipeline, tmp
     assert lineage["archive"]["enc_bytes"] > 0
 
     # archive restores the dropped rows BIT-EXACTLY (Gorilla is lossless)
-    restored = restore_archive(pipeline, archive_root, "1h")
-    got = {
-        (r["conv_id"], r["metric"], r["bucket_start"], r["cnt"], r["sum"], r["mean"],
-         r["min"], r["max"], r["p50"], r["p99"])
-        for r in restored.collect()
-    }
+    got = _rows(restore_archive(pipeline, archive_root, "1h"))
     assert got == expired_rows
 
     # surviving tier + restored archive == original tier content
@@ -176,3 +177,46 @@ def test_archive_scan_is_partition_pruned(spark, pipeline, tmp_path):
     src = pipeline.read_tier("1h").where(F.col("p_date").cast("string").isin(dates[:1]))
     plan = src._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "p_date" in plan
+
+
+def test_restore_lookup_pushes_conv_filter_to_archive_scan(spark, pipeline, tmp_path):
+    """A conv_id lookup on the restored tier reaches the archive's parquet
+    scan as a pushed filter, returns that conversation's expired rows bit
+    for bit, and still resolves duplicate blobs to the newest copy."""
+    dates = _p_dates(pipeline, "1h")
+    now = dt.date.fromisoformat(dates[-1]) + dt.timedelta(days=1)
+    before = _tier_rows(pipeline, "1h")
+    arch = str(tmp_path / "cold")
+    apply_retention(pipeline, {"1h": 1}, now=now, archive_root=arch)
+    expired = before - _tier_rows(pipeline, "1h")
+    conv = min(r[0] for r in expired)
+    expected = {r for r in expired if r[0] == conv}
+
+    def lookup():
+        return restore_archive(pipeline, arch, "1h").where(F.col("conv_id") == conv)
+
+    plan = lookup()._jdf.queryExecution().executedPlan().toString()
+    assert re.search(rf"PushedFilters: \[[^\]]*EqualTo\(conv_id,{conv}\)", plan), plan
+    assert _rows(lookup()) == expected
+
+    # re-archive the conversation's blobs under a newer stamp with every
+    # value negated, as a retried archive of changed data would
+    path = os.path.join(arch, "tier=1h")
+    blobs = spark.read.parquet(path).where(F.col("conv_id") == conv)
+    newer = []
+    for r in blobs.collect():
+        d = r.asDict()
+        d["val_blob"] = encode_floats(-decode_floats(bytes(d["val_blob"])))
+        d["archived_at_ms"] += 1
+        newer.append(tuple(d[f] for f in blobs.schema.fieldNames()))
+    spark.createDataFrame(newer, blobs.schema).write.mode("append").partitionBy("p_date").parquet(path)
+    assert _rows(lookup()) == {(c, m, b, *(-v for v in vals)) for c, m, b, *vals in expected}
+
+
+def test_decompress_empty_frame_keeps_schema(spark):
+    empty = spark.createDataFrame([], "conv_id string, metric string, bucket_start timestamp, mean double")
+    out = decompress_series(compress_series(empty))
+    assert out.schema.simpleString() == (
+        "struct<conv_id:string,metric:string,bucket_start:timestamp,value:double>"
+    )
+    assert out.collect() == []

@@ -14,15 +14,20 @@ whole Arrow batch of chunks — with day-sized chunks of a handful of points,
 one pandas group per chunk would make per-group overhead the whole runtime.
 
 At 100 TB this is the storage win for cold data: a metronome-ish series
-packs ~60-80x for timestamps and 5-20x for values; blobs stay individually
-decodable so point lookups only touch the covering chunk.
+packs ~60-80x for timestamps and 5-20x for values. Blobs stay individually
+decodable, and `decompress_series` is a projection, so a lookup by conv_id or
+metric decodes only the chunks it selects: the predicate reaches the parquet
+scan as a pushed filter, and the rows it rejects never reach Python.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
 
 from .partitioning import per_series
 
@@ -64,37 +69,40 @@ def compress_series(
     )
 
 
-def decompress_series(df: DataFrame) -> DataFrame:
-    """Compressed chunks → (conv_id, metric, bucket_start, value) points."""
-    import pandas as pd
-
+@arrow_udf(ArrayType(StructType([StructField("us", LongType()), StructField("value", DoubleType())])))
+def _decode_chunks(ts_blobs: pa.Array, val_blobs: pa.Array) -> pa.Array:
+    """Both blobs of each chunk row → one list of (epoch µs, value) points;
+    one call per Arrow batch of chunk rows."""
     from .kernels.gorilla import decode_floats, decode_timestamps
 
-    def unpack(pdf: pd.DataFrame) -> pd.DataFrame:
-        # one output frame per Arrow batch (np.repeat for the id columns),
-        # not one pandas frame per chunk row
-        ts_list = [decode_timestamps(bytes(b)) for b in pdf["ts_blob"]]
-        val_list = [decode_floats(bytes(b)) for b in pdf["val_blob"]]
-        if not ts_list:
-            return pd.DataFrame(
-                {"conv_id": pd.Series(dtype=str), "metric": pd.Series(dtype=str),
-                 "bucket_start": pd.Series(dtype="datetime64[us]"),
-                 "value": pd.Series(dtype=np.float64)}
-            )
-        ns = np.array([len(t) for t in ts_list])
-        return pd.DataFrame(
-            {
-                "conv_id": np.repeat(pdf["conv_id"].to_numpy(), ns),
-                "metric": np.repeat(pdf["metric"].to_numpy(), ns),
-                "bucket_start": np.concatenate(ts_list).astype("datetime64[us]"),
-                "value": np.concatenate(val_list),
-            }
-        )
+    ts = [decode_timestamps(b) for b in ts_blobs.to_pylist()]
+    vals = [decode_floats(b) for b in val_blobs.to_pylist()]
+    offsets = np.zeros(len(ts) + 1, dtype=np.int32)
+    np.cumsum([len(t) for t in ts], out=offsets[1:])
+    points = pa.StructArray.from_arrays(
+        [pa.array(np.concatenate([np.empty(0, np.int64), *ts])),
+         pa.array(np.concatenate([np.empty(0, np.float64), *vals]))],
+        names=["us", "value"],
+    )
+    return pa.ListArray.from_arrays(pa.array(offsets), points)
 
-    # mapInPandas: each chunk row explodes independently, no shuffle at all
-    return df.mapInPandas(
-        lambda it: (unpack(pdf) for pdf in it),
-        "conv_id string, metric string, bucket_start timestamp, value double",
+
+def decompress_series(df: DataFrame) -> DataFrame:
+    """Compressed chunks → (conv_id, metric, bucket_start, value) points.
+
+    A projection, not a map over partitions: an Arrow UDF decodes each
+    chunk row into a list of points and `inline` explodes it. A caller's
+    predicate on conv_id or metric therefore pushes below the decode (and
+    any window or aggregate keyed on them) into the parquet scan, so only
+    the selected chunks are decoded. The decode is CPU-bound
+    Python, so it runs at one task per core, like `per_series`: an explicit
+    repartition on a struct of the chunk keys, which AQE does not coalesce.
+    """
+    n = max(1, df.sparkSession.sparkContext.defaultParallelism)
+    return (
+        df.repartition(n, F.struct("conv_id", "metric", "chunk"))
+        .select("conv_id", "metric", F.inline(_decode_chunks("ts_blob", "val_blob")))
+        .select("conv_id", "metric", F.timestamp_micros("us").alias("bucket_start"), "value")
     )
 
 

@@ -57,9 +57,17 @@ def gapfill(
     rows so downstream code can distinguish observed from filled.
     """
     step = TIER_SECONDS[tier]
-    grid = _dense_grid(rollup_df, step)
-    dense = grid.join(rollup_df, ["conv_id", "metric", "bucket_start"], "left").withColumn(
-        "is_gap", F.col("cnt").isNull()
+    # The windows below are CPU-bound. An explicit width keeps them at one
+    # task per core: AQE would coalesce a small input's shuffle to a single
+    # task, and it leaves a repartition(n, ...) alone. When the rollup side
+    # is broadcast, the join keeps the grid's partitioning and Spark drops
+    # the second repartition as redundant.
+    n = max(1, rollup_df.sparkSession.sparkContext.defaultParallelism)
+    grid = _dense_grid(rollup_df.repartition(n, "conv_id", "metric"), step)
+    dense = (
+        grid.join(rollup_df, ["conv_id", "metric", "bucket_start"], "left")
+        .repartition(n, "conv_id", "metric")
+        .withColumn("is_gap", F.col("cnt").isNull())
     )
 
     w = Window.partitionBy("conv_id", "metric").orderBy("bucket_start")

@@ -22,10 +22,11 @@ that overhead in two ways:
   core.
 
 The width is an explicit `repartition(n, ...)` on the keys: user-specified
-repartitions are exempt from AQE's byte-based post-shuffle coalescing,
-which would otherwise shrink a few-MB kernel input to one or two
-partitions and run the CPU-bound stage on one core. The `groupBy` reuses
-that clustering, so the gather adds a single exchange.
+repartitions are exempt from AQE's byte-based post-shuffle coalescing (on
+in `session.get_spark`), which would otherwise shrink a few-MB kernel input
+to one partition and run the CPU-bound stage on one core. The `groupBy`
+reuses that clustering, so the gather adds a single exchange. `gapfill` and
+`compress.decompress_series` pin their CPU-bound stages the same way.
 """
 
 from __future__ import annotations

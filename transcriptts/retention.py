@@ -29,7 +29,10 @@ Scale shape: the expiry decision is pure filesystem metadata; the archive
 job reads only the expiring partitions (partition-pruned scan), shuffles
 once on (conv_id, metric, chunk) — exactly the cold-compression plan that
 `compress.py` documents — and the blobs it writes are individually
-decodable, so a later point lookup touches one chunk, not the archive.
+decodable. A point lookup on the restored frame decodes only what it
+returns: a conv_id predicate passes the unmelt aggregate, the decode and
+the dedup window (all keyed on conv_id) and reaches the archive's parquet
+scan as a pushed filter.
 """
 
 from __future__ import annotations
@@ -114,10 +117,10 @@ def unmelt_stats(points: DataFrame, stats: tuple[str, ...] = STAT_COLS) -> DataF
         "bucket_start",
         "value",
     )
-    wide = (
-        split.groupBy("conv_id", "metric", "bucket_start")
-        .pivot("stat", list(stats))
-        .agg(F.first("value"))
+    # one conditional aggregate per stat: a bucket holds at most one point
+    # per stat, so max returns it unchanged, in one shuffle (a pivot takes two)
+    wide = split.groupBy("conv_id", "metric", "bucket_start").agg(
+        *[F.max(F.when(F.col("stat") == s, F.col("value"))).alias(s) for s in stats]
     )
     return wide.withColumn("cnt", F.col("cnt").cast("bigint"))
 
@@ -177,6 +180,8 @@ def restore_archive(
 
     Duplicate blobs for the same (conv_id, metric, chunk) — possible after a
     crash between archive and delete — resolve to the newest archived copy.
+    Every step is keyed on conv_id, so `restore_archive(...).where(conv_id
+    == c)` filters the blobs in the scan and decodes only c's chunks.
     """
     blobs = pipeline.spark.read.parquet(os.path.join(archive_root, f"tier={tier}"))
     from pyspark.sql import Window

@@ -34,14 +34,23 @@ def get_spark(
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
-        # Byte-based post-shuffle coalescing is right for JVM aggregates but
-        # wrong for CPU-bound grouped Python kernels: a few-MB input gets
-        # coalesced to 1-2 partitions and the kernel stage runs on one core
-        # (measured 105s -> 11.5s for penalty selection at local[32]).
-        # Shuffle width is already sized to cores above, so coalescing buys
-        # little here; kernel stages additionally pin their own width via
-        # partitioning.per_series for sessions that re-enable this.
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
+        # Post-shuffle coalescing sizes each shuffle to its bytes: AQE merges
+        # partitions up to max(minPartitionSize, bytes / minPartitionNum), so
+        # a few-kB shuffle of the incremental refresh runs 1 task instead of
+        # 4 waves of tiny ones, while a shuffle of 4 MB or more at local[4]
+        # keeps the full width set above, the width measured at scale.
+        # minPartitionNum defaults to defaultParallelism (1 per core), which
+        # would cap a large shuffle at one task per core; Spark marks it
+        # deprecated but coalescing still reads it. minPartitionSize is
+        # 256 KB, not the 1 MB default: the exact-percentile rollup of sf0.1
+        # shuffles 1.8 MB, which 1 MB partitions run as 2 tasks on 4 cores
+        # (measured slower than 16 uncoalesced tasks; 256 KB gives 8 and was
+        # faster than both). CPU-bound Python and window stages are not sized
+        # by bytes: they pin their width with an explicit repartition(n, ...),
+        # which coalescing leaves alone (see partitioning.per_series).
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionNum", str(shuffle_partitions))
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256KB")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
